@@ -5,22 +5,21 @@ compress_uuid_map (utils/bulk_utils.py:377-414): connected components
 over duplicate pairs, canonical = lexicographically smallest uuid in
 the component (bulk_utils.py:392-396 — string min matches exactly).
 
-Three strategies, picked by input shape:
+Two strategies, picked by input shape:
 
-1. **Grouped (the production path)** — duplicate pairs are produced by
-   group-scoped blocking (dedupe.candidate_pairs joins on group_id), so
-   components can NEVER cross a group boundary. `connected_components
-   _grouped` exploits this: `groupBy(group_id).applyInPandas` runs an
-   exact union-find per group ON THE EXECUTORS. No driver collect, no
-   iteration, one shuffle — this is the 1000-executor design (each
-   group's pair set is conversation-scoped and small; a pathological
-   giant group degrades to one slow task, which AQE cannot split for
-   applyInPandas — bound it upstream via blocking).
-2. **Driver union-find** — for ungrouped pair sets small enough to
-   collect (strategy picked by a cheap `count()`, not a speculative
-   collect), one exact pass beats the loop's per-round job overhead.
-3. **Iterative min-label propagation** — the GraphFrames
-   connectedComponents recipe for large ungrouped graphs: label(v) ←
+1. **Packed per-group union-find (the production path)** — duplicate
+   pairs are produced by group-scoped blocking (dedupe.candidate_pairs
+   joins on group_id), so components can NEVER cross a group boundary.
+   `connected_components_packed` packs each group's pair set into one
+   row and runs an exact union-find per row inside an Arrow-batched
+   pandas UDF ON THE EXECUTORS. No driver collect, no iteration, one
+   shuffle; a pathological giant group degrades to one slow task
+   (bound it upstream via blocking).
+2. **Ungrouped (`connected_components`)** — for pair sets small enough
+   to collect (picked by a cheap `count()`, not a speculative
+   collect), one exact driver union-find pass beats the loop's
+   per-round job overhead; larger graphs run iterative min-label
+   propagation, the GraphFrames connectedComponents recipe: label(v) ←
    min(label(v), min label of neighbors) until fixpoint; monotone, so
    iterations ≈ diameter; `localCheckpoint()` per round cuts lineage.
 """
@@ -56,42 +55,6 @@ def _union_find(pairs_rows) -> list[tuple[str, str]]:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     return [(n, find(n)) for n in parent]
-
-
-def connected_components_grouped(
-    pairs: DataFrame,
-    group_col: str = "group_id",
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """pairs(group_col, src, dst) → (group_col, node, component), exact
-    union-find per group on the executors.
-
-    Correct ONLY when edges never cross `group_col` values — true for
-    dedupe pairs (blocking joins include group_id). One shuffle on
-    group_col; embarrassingly parallel across groups."""
-    import pandas as pd
-
-    out_schema = f"{group_col} string, node string, component string"
-
-    def _cc(pdf: pd.DataFrame) -> pd.DataFrame:
-        comp = _union_find(zip(pdf[src].tolist(), pdf[dst].tolist()))
-        if not comp:
-            return pd.DataFrame({group_col: [], "node": [], "component": []})
-        g = pdf[group_col].iat[0]
-        return pd.DataFrame(
-            {
-                group_col: g,
-                "node": [n for n, _ in comp],
-                "component": [c for _, c in comp],
-            }
-        )
-
-    return (
-        pairs.select(group_col, src, dst)
-        .groupBy(group_col)
-        .applyInPandas(_cc, schema=out_schema)
-    )
 
 
 def connected_components(
@@ -171,17 +134,21 @@ def connected_components_packed(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """Same contract as connected_components_grouped, different physical
-    shape: pack each group's pair set into ONE row (collect_list of
-    structs — ObjectHashAggregate, map-side partial), run union-find
-    per row inside an Arrow-batched pandas_udf, explode back.
+    """pairs(group_col, src, dst) → (group_col, node, component), exact
+    union-find per group on the executors. Correct ONLY when edges never
+    cross `group_col` values — true for dedupe pairs (blocking joins
+    include group_id).
 
-    Why: applyInPandas pays a per-GROUP Arrow batch + Python call; a KG
-    corpus has very many tiny conversation groups (10⁵-10⁶), so that
-    overhead dominates the actual union-find. Here the Python cost is
-    per-BATCH (thousands of groups per Arrow batch). The one-row-per-
-    group packing holds as long as a single group's pair set fits in a
-    row (same bound applyInPandas already imposed on a group)."""
+    Physical shape: pack each group's pair set into ONE row
+    (collect_list of structs — ObjectHashAggregate, map-side partial),
+    run union-find per row inside an Arrow-batched pandas_udf, explode
+    back. Why not groupBy().applyInPandas: that pays a per-GROUP Arrow
+    batch + Python call; a KG corpus has very many tiny conversation
+    groups (10⁵-10⁶), so that overhead dominates the actual union-find.
+    Here the Python cost is per-BATCH (thousands of groups per Arrow
+    batch). The one-row-per-group packing holds as long as a single
+    group's pair set fits in a row (the bound applyInPandas imposes on
+    a group too)."""
     import pandas as pd  # noqa: F401 (annotation namespace)
     from pyspark.sql import types as T
 

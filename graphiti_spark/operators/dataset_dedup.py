@@ -690,6 +690,8 @@ def contamination_bloom(
     Returns (doc_id, n_bloom_hits, contaminated): a superset of the
     exact operator's contaminated set (pytest-gated no-false-negative
     + FPR bound)."""
+    if bits <= 0 or bits % 8:
+        raise ValueError(f"bits must be a positive multiple of 8, got {bits}")
     nbytes = bits // 8
     bench_pos = (
         _word_ngrams(benchmark, n, text_col, id_col, keep_id=False)

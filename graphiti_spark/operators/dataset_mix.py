@@ -373,7 +373,8 @@ def split_assign(
     split absorbs rounding. Map-only: no shuffle, no state.
     """
     total = sum(fractions.values())
-    assert abs(total - 1.0) < 1e-9, f"fractions sum to {total}, want 1.0"
+    if abs(total - 1.0) >= 1e-9:
+        raise ValueError(f"fractions sum to {total}, want 1.0")
     bucket = F.substring(
         F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))), 1, 8
     )
@@ -406,11 +407,8 @@ def token_budget_cap(
     runs, engines, partitionings and retries, like every sampler here.
 
     Scale: one window cumulative sum per stratum (partitioned running
-    frame, never a global sort). For a pathological giant stratum the
-    same md5-threshold prefilter as `source_cap` bounds the sorted set:
-    an approximate tokens-per-hash-unit rate from the per-stratum
-    count/sum aggregates caps the candidate rows at ~budget(1+ε)
-    before the exact cumsum. Returns kept rows plus `cum_before`
+    frame, never a global sort); a giant stratum sorts all its rows in
+    one task. Returns kept rows plus `cum_before`
     (tokens admitted ahead of this doc — the mix-accounting column).
     """
     w = Window.partitionBy(strat_col).orderBy("_rk", id_col)

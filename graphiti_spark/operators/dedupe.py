@@ -188,7 +188,7 @@ def resolve_nodes(
     """
     entities = distinct_entities(mentions_with_uuid)
     # The blocked token self-join is consumed exactly once now: the
-    # grouped executor-side union-find (connected_components_grouped)
+    # packed executor-side union-find (connected_components_packed)
     # replaced the old CC driver probe + groups-union, which consumed
     # the pair set three ways and forced an eager localCheckpoint here.
     # Sharing of uuid_map across downstream actions is the caller's

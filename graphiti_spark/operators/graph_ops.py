@@ -201,5 +201,7 @@ def clear_data(
         return {
             name: df.filter(F.lit(False)) for name, df in tables.items()
         }
-    cond = ~F.col("group_id").isin(group_ids)
+    # a NULL group_id belongs to no listed group: keep it (a bare
+    # ~isin is NULL there, which the filter would drop)
+    cond = F.col("group_id").isNull() | ~F.col("group_id").isin(group_ids)
     return {name: df.filter(cond) for name, df in tables.items()}

@@ -29,17 +29,18 @@ def main() -> None:
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graphiti_submit_out"
     run_id = sys.argv[3] if len(sys.argv) > 3 else "submit1"
 
-    spark = (
-        SparkSession.builder.appName("graphiti_spark_submit")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .getOrCreate()
-    )
-
-    # engine modules resolve from the --py-files zip
+    # engine modules resolve from the --py-files zip, which spark-submit
+    # puts on the driver's PYTHONPATH before this script starts
     from graphiti_spark import transcripts as tr
     from graphiti_spark.plans import pipeline as pl
+    from graphiti_spark.session import ENGINE_SQL_CONF
+
+    # master, memory and partitions come from spark-submit
+    spark = (
+        SparkSession.builder.appName("graphiti_spark_submit")
+        .config(map=ENGINE_SQL_CONF)
+        .getOrCreate()
+    )
 
     t = tr.transcripts_from_events(spark, sf_dir)
     counts = pl.run_pipeline(spark, t, out_dir, run_id=run_id)

@@ -858,6 +858,9 @@ def test_contamination_bloom(spark):
     # either: the two probes agree exactly
     assert (bloom.contaminated == exact.contaminated).all()
     assert (bloom.n_bloom_hits == exact.n_matched_ngrams).all()
+    # the mask is built in whole bytes
+    with pytest.raises(ValueError, match="multiple of 8"):
+        ddp.contamination_bloom(docs, bench, bits=(1 << 10) + 3)
 
     # force collisions with a tiny filter: still no false negatives,
     # and the flagged set can only GROW
@@ -881,6 +884,8 @@ def test_split_assign_and_token_budget(spark):
     # determinism under repartitioning
     out2 = dmx.split_assign(df.repartition(7), {"train": 0.9, "val": 0.05, "test": 0.05}).toPandas()
     assert out.sort_values("doc_id").split.tolist() == out2.sort_values("doc_id").split.tolist()
+    with pytest.raises(ValueError, match="sum to"):
+        dmx.split_assign(df, {"train": 0.8, "val": 0.1})
 
     cap = dmx.token_budget_cap(df, budget=1000.0).toPandas()
     # every kept doc was admitted strictly under budget

@@ -238,3 +238,22 @@ def test_chain_corpus_requires_true_closure(spark, sf_dir):
     assert got == want, "union-find != brute-force closure"
     divergent = [k for k in want if want[k] != onehop[k]]
     assert divergent, "chain corpus produced no multi-hop components"
+
+
+def test_warm_build_graph_compiles_no_classes(spark):
+    """A warm build_graph + force_outputs pass reuses every generated
+    class: the session's codegen cache holds the engine's working set.
+    At Spark's default of 100 entries every pass evicted and recompiled
+    about 180 classes on this input."""
+    t = tr.synthesize_transcripts(spark, n_convs=24, turns_per_conv=10, skew_frac=0.0).localCheckpoint()
+    assert t.count() == 240
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    for _ in range(2):
+        pl.force_outputs(pl.build_graph(t))
+    before = compiles()
+    pl.force_outputs(pl.build_graph(t))
+    assert compiles() - before <= 5

@@ -118,6 +118,17 @@ def test_clear_data(spark, sf_dir):
         assert wiped[name].schema == tables[name].schema, name
 
 
+def test_clear_data_keeps_null_group_rows(spark):
+    from graphiti_spark.operators import graph_ops as go
+
+    nodes = spark.createDataFrame(
+        [("n1", "g1"), ("n2", "g2"), ("n3", None)], "uuid string, group_id string"
+    )
+    scoped = go.clear_data({"nodes": nodes}, ["g1"])
+    # a NULL-group row belongs to no listed group, so it survives
+    assert sorted(r.uuid for r in scoped["nodes"].collect()) == ["n2", "n3"]
+
+
 def test_group_id_and_excluded_type_validators(spark):
     import pytest as _pytest
 
